@@ -9,6 +9,14 @@ LLM-pipeline surface (100 TB training-data dedup): exact, normalized-text,
 MinHash+LSH, SimHash, and n-gram-Jaccard near-dup. All are shuffle-on-key
 group-bys or bucket-joins — nothing collects to the driver; candidate
 generation is always blocked/banded so no O(n²) pair explosion.
+
+MinHash-LSH has one path: :func:`gram_hashes_frame` (one checkpointed
+text pass) → :func:`minhash_lsh_candidates_from_hashes` (self-join) or
+:func:`lsh_probe_candidates_from_hashes` (delta vs corpus) →
+:func:`jaccard_pairs_from_hashes` (exact confirm, :func:`jaccard`).
+Signatures and SimHash fingerprints are Arrow UDFs; the Column specs they
+are parity-tested against (``_permutation_mix``, :func:`simhash_quadrants`)
+and the string-gram :func:`jaccard_pairs` are kept as test references.
 """
 
 from __future__ import annotations
@@ -97,11 +105,11 @@ def normalized_dedup(
 # ---------------------------------------------------------------------------
 # MinHash + LSH near-dup.
 #
-# Pipeline: shingle (word n-grams) → per-shingle 64-bit hashes → k minhash
+# Pipeline: word n-grams hashed to 64 bits (gram_hashes_frame) → k minhash
 # values (one per permutation, computed as min over xor-mixed hashes — the
 # standard "one hash function, k mixers" trick) → band the signature → exact
-# group-by on (band_id, band_hash) → candidate pairs → optional exact Jaccard
-# confirm. Every step is a map or a key-shuffle; candidate volume is bounded
+# equi-join on (band, band_hash) → candidate pairs → exact Jaccard confirm
+# over the same gram hashes. Every step is a map or a key-shuffle; candidate volume is bounded
 # by band collisions, never n².
 
 
@@ -175,36 +183,20 @@ def shingle_hashes(col: Column, n: int = 3) -> Column:
 
 
 def _permutation_mix(i: int):
-    # closure factory: a 1-arg lambda so F.transform doesn't treat the second
-    # parameter as the element index
+    """Permutation ``i`` of the minhash signature as a Column lambda — the
+    executable spec the Arrow signature path is parity-tested against
+    (``array_min(transform(bh, _permutation_mix(i)))`` per slot). A closure
+    factory so F.transform sees a 1-arg lambda, not (element, index)."""
     return lambda h: F.xxhash64(h, F.lit(i))
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """k-element minhash signature over a shingle array.
-
-    Each shingle STRING is hashed exactly once (the expensive part); the k
-    "permutations" then re-mix the resulting int64 with xxhash64(h, i) —
-    a cheap long-hash, so cost is O(shingles + k·shingles·long_mix) instead
-    of O(k·shingles·string_hash). All JVM-side, no Python. Returns
-    array<bigint> of length ``num_hashes``.
-    """
-    base = F.transform(shingle_col, lambda s: F.xxhash64(s))
-    return F.array(
-        *[
-            F.array_min(F.transform(base, _permutation_mix(i)))
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def _minhash_signature_arrow(num_hashes: int = 64):
     """Arrow-vectorized minhash: array<int64> shingle hashes → k-element
-    signature, BIT-EXACT with the Column path (``minhash_signature`` /
-    the staged build in ``minhash_lsh_candidates``), parity-tested in
+    signature, BIT-EXACT with the Column spec (``array_min(transform(bh,
+    _permutation_mix(i)))`` per slot), parity-tested in
     ``tests/test_minhash_parity.py``.
 
-    The Column path evaluates ``array_min(transform(bh, xxhash64(h, i)))``
+    The Column spec evaluates ``array_min(transform(bh, xxhash64(h, i)))``
     k times — k interpreted Catalyst lambda dispatches per shingle. Here
     the same math runs as numpy C: Spark's ``xxhash64(h, lit(i))`` chains
     XXH64 over its children (``hashInt(i, hashLong(h, 42))``), and both
@@ -294,10 +286,9 @@ def gram_hashes_frame(
     id_col: str = "doc_id",
     shingle_n: int = 3,
     extra: list[Column] | None = None,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(id, [extra...], _bh) — distinct word-n-gram 64-bit hashes per doc,
-    spread across cores and (by default) eagerly checkpointed.
+    spread across cores and eagerly checkpointed.
 
     The normalize+tokenize+hash map over raw text is THE expensive stage of
     every near-dup pipeline; queries that need grams more than once (LSH
@@ -306,14 +297,19 @@ def gram_hashes_frame(
     expression per consumer (guide §2.4/§5 — optimization r11). ``extra``
     lets callers piggyback cheap projections of the same scan (e.g.
     ``length(text)``) so the raw table is not re-scanned later.
+
+    The spread matters because the testdata parquet is one scan partition;
+    the eager checkpoint because the frame typically feeds BOTH sides of a
+    join — unmaterialized, each side would re-derive the hashes from text.
     """
     cols = [F.col(id_col)]
     if extra:
         cols.extend(extra)
-    out = _spread(df).select(
-        *cols, shingle_hashes(F.col(text_col), shingle_n).alias("_bh")
+    return (
+        _spread(df)
+        .select(*cols, shingle_hashes(F.col(text_col), shingle_n).alias("_bh"))
+        .localCheckpoint(eager=True)
     )
-    return out.localCheckpoint(eager=True) if checkpoint else out
 
 
 def _band_explode(
@@ -345,25 +341,11 @@ def _band_explode(
 
 
 def _signature_select(
-    hashed: DataFrame,
-    id_col: str,
-    bh_col: str,
-    num_hashes: int,
-    use_arrow: bool,
+    hashed: DataFrame, id_col: str, bh_col: str, num_hashes: int
 ) -> DataFrame:
-    if use_arrow:
-        return hashed.select(
-            F.col(id_col),
-            _minhash_signature_arrow(num_hashes)(F.col(bh_col)).alias("_sig"),
-        )
     return hashed.select(
         F.col(id_col),
-        F.array(
-            *[
-                F.array_min(F.transform(F.col(bh_col), _permutation_mix(i)))
-                for i in range(num_hashes)
-            ]
-        ).alias("_sig"),
+        _minhash_signature_arrow(num_hashes)(F.col(bh_col)).alias("_sig"),
     )
 
 
@@ -373,194 +355,18 @@ def banded_minhash_from_hashes(
     bh_col: str = "_bh",
     num_hashes: int = 64,
     bands: int = 16,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """Banded signatures from a PRECOMPUTED gram-hash frame
-    (:func:`gram_hashes_frame`). No checkpoint here: the input frame is
-    already materialized, and the signature map runs once per consumer —
-    callers that fan a side out more than once checkpoint themselves."""
+    """Per-document banded MinHash signatures (id, band, band_hash) from a
+    PRECOMPUTED gram-hash frame (:func:`gram_hashes_frame`). At 100 TB this
+    frame IS the near-dup index a production pipeline persists (bucketed by
+    (band, band_hash)). No checkpoint here: the input frame is already
+    materialized, and the signature map runs once per consumer — callers
+    that fan a side out more than once checkpoint themselves."""
     return _band_explode(
-        _signature_select(hashed, id_col, bh_col, num_hashes, use_arrow),
+        _signature_select(hashed, id_col, bh_col, num_hashes),
         id_col,
         num_hashes,
         bands,
-    )
-
-
-def banded_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Per-document banded MinHash signatures: (id, band, band_hash).
-
-    The shared build stage of both the symmetric self-join
-    (:func:`minhash_lsh_candidates`) and the asymmetric probe-vs-index
-    join (:func:`lsh_probe_candidates`). At 100 TB this frame IS the
-    near-dup index a production pipeline persists (bucketed by
-    (band, band_hash)); here it is built inline per query.
-    """
-    # staged projections so the shingle hashes materialize ONCE per row (a
-    # single nested expression would re-derive them for every one of the k
-    # permutations)
-    hashed = _spread(df.select(F.col(id_col), F.col(text_col))).select(
-        F.col(id_col),
-        shingle_hashes(F.col(text_col), shingle_n).alias("_bh"),
-    )
-    sig = _signature_select(hashed, id_col, "_bh", num_hashes, use_arrow)
-    # Eager local checkpoint of the per-DOC signatures: a downstream join
-    # would otherwise (a) launch BOTH join sides concurrently, each
-    # computing the full signature pipeline (persist() alone is lazy — the
-    # two sides race before the cache fills), and (b) let constraint
-    # inference push the whole signature expression into the file scan as
-    # an IsNotNull filter — single-partition and pre-repartition.
-    # Checkpointing materializes once, truncates lineage, and the blocks
-    # are GC'd by the ContextCleaner when the frame drops out of scope (no
-    # unpersist bookkeeping). Checkpoint BEFORE the bands× explode —
-    # banding is a trivial JVM map, cheaper recomputed per join side than
-    # stored. Signatures are tiny next to the text — safe at any scale.
-    sig = sig.localCheckpoint(eager=True)
-    return _band_explode(sig, id_col, num_hashes, bands)
-
-
-def _self_join_candidates(banded: DataFrame, id_col: str) -> DataFrame:
-    """(id, band, band_hash) → distinct (id_a < id_b) bucket collisions —
-    the ONE self-join body shared by the string-input and precomputed-hash
-    LSH candidate functions (ADVICE r11: join fixes land in one place)."""
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band") == F.col("b.band"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
-def _probe_join_candidates(
-    bp: DataFrame, bi: DataFrame, id_col: str
-) -> DataFrame:
-    """Banded probe frame × banded index frame → distinct
-    (probe_id, index_id) bucket hits — the shared probe-join body."""
-    bp = bp.alias("p")
-    bi = bi.alias("i")
-    return (
-        bp.join(
-            bi,
-            on=[
-                F.col("p.band") == F.col("i.band"),
-                F.col("p.band_hash") == F.col("i.band_hash"),
-            ],
-        )
-        .select(
-            F.col(f"p.{id_col}").alias("probe_id"),
-            F.col(f"i.{id_col}").alias("index_id"),
-        )
-        .distinct()
-    )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash-LSH.
-
-    rows = num_hashes/bands; P(candidate) ≈ 1-(1-j^rows)^bands for Jaccard j.
-    Defaults (64 hashes, 16 bands × 4 rows) catch j ≳ 0.5 reliably.
-
-    Scale shape: signature build is a pure map; banding explodes each doc
-    into ``bands`` rows; the self-join on (band, band_hash) is an equi-join
-    whose cost is bounded by real collisions. Returns (id_a, id_b) with
-    id_a < id_b, distinct.
-
-    ``use_arrow`` picks the vectorized signature path (default; bit-exact
-    with the expression path — tests/test_minhash_parity.py); the pure
-    Column expression is kept as the executable spec and for environments
-    without Arrow.
-    """
-    banded = banded_minhash(
-        df, text_col, id_col, num_hashes, bands, shingle_n, use_arrow
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            on=[
-                F.col(f"a.band") == F.col("b.band"),
-                F.col(f"a.band_hash") == F.col("b.band_hash"),
-                F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-
-
-def lsh_probe_candidates(
-    probe: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    use_arrow: bool = True,
-) -> DataFrame:
-    """Asymmetric banded-LSH candidates: probe docs vs an indexed corpus.
-
-    The INCREMENTAL dedup shape: a (small) delta of new documents is
-    checked against a (huge) existing corpus without the corpus ever
-    self-joining — the equi-join on (band, band_hash) touches only the
-    index buckets the probe's band hashes actually hit. At 100 TB the
-    index side is a PRECOMPUTED, persisted banded-signature table
-    (bucketed by band_hash so the probe join is shuffle-free on the
-    corpus side); cost is O(|delta| · bands) probe rows × bucket hit
-    size, independent of corpus row count. Returns distinct
-    (probe_id, index_id) pairs; ids may overlap between frames — the
-    caller guarantees disjointness (incremental pipelines key deltas
-    into fresh id space).
-    """
-    bp = banded_minhash(
-        probe, text_col, id_col, num_hashes, bands, shingle_n, use_arrow
-    ).alias("p")
-    bi = banded_minhash(
-        index, text_col, id_col, num_hashes, bands, shingle_n, use_arrow
-    ).alias("i")
-    return (
-        bp.join(
-            bi,
-            on=[
-                F.col("p.band") == F.col("i.band"),
-                F.col("p.band_hash") == F.col("i.band_hash"),
-            ],
-        )
-        .select(
-            F.col(f"p.{id_col}").alias("probe_id"),
-            F.col(f"i.{id_col}").alias("index_id"),
-        )
-        .distinct()
     )
 
 
@@ -569,15 +375,28 @@ def minhash_lsh_candidates_from_hashes(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """:func:`minhash_lsh_candidates` over a PRECOMPUTED gram-hash frame
-    (:func:`gram_hashes_frame`) — same (id_a, id_b) pair set; the caller's
-    single text pass is shared with the confirm stage (optimization r11).
-    The signature frame still checkpoints before the self-join (it feeds
-    both sides)."""
+    """Candidate near-dup pairs via banded MinHash-LSH over a gram-hash
+    frame (:func:`gram_hashes_frame`) — the caller's single text pass is
+    shared with the confirm stage (optimization r11).
+
+    rows = num_hashes/bands; P(candidate) ≈ 1-(1-j^rows)^bands for Jaccard j.
+    Defaults (64 hashes, 16 bands × 4 rows) catch j ≳ 0.5 reliably.
+
+    Scale shape: signature build is a pure map; banding explodes each doc
+    into ``bands`` rows; the self-join on (band, band_hash) is an equi-join
+    whose cost is bounded by real collisions. Returns (id_a, id_b) with
+    id_a < id_b, distinct.
+    """
+    # Eager local checkpoint of the per-DOC signatures: the self-join would
+    # otherwise (a) launch BOTH join sides concurrently, each computing the
+    # full signature map (persist() alone is lazy — the two sides race
+    # before the cache fills), and (b) let constraint inference push the
+    # signature expression upstream as an IsNotNull filter. Checkpoint
+    # BEFORE the bands× explode — banding is cheaper recomputed per side
+    # than stored. Signatures are tiny next to the text.
     sig = _signature_select(
-        hashed, id_col, "_bh", num_hashes, use_arrow
+        hashed, id_col, "_bh", num_hashes
     ).localCheckpoint(eager=True)
     banded = _band_explode(sig, id_col, num_hashes, bands)
     a = banded.alias("a")
@@ -605,17 +424,27 @@ def lsh_probe_candidates_from_hashes(
     id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    use_arrow: bool = True,
 ) -> DataFrame:
-    """:func:`lsh_probe_candidates` over PRECOMPUTED gram-hash frames
-    (:func:`gram_hashes_frame`) — same (probe_id, index_id) pair set, but
-    the caller's one text pass per side is shared with the confirm stage
-    and any audits instead of re-shingling here (optimization r11)."""
+    """Asymmetric banded-LSH candidates: probe docs vs an indexed corpus,
+    both given as gram-hash frames (:func:`gram_hashes_frame`).
+
+    The INCREMENTAL dedup shape: a (small) delta of new documents is
+    checked against a (huge) existing corpus without the corpus ever
+    self-joining — the equi-join on (band, band_hash) touches only the
+    index buckets the probe's band hashes actually hit. At 100 TB the
+    index side is a PRECOMPUTED, persisted banded-signature table
+    (bucketed by band_hash so the probe join is shuffle-free on the
+    corpus side); cost is O(|delta| · bands) probe rows × bucket hit
+    size, independent of corpus row count. Returns distinct
+    (probe_id, index_id) pairs; ids may overlap between frames — the
+    caller guarantees disjointness (incremental pipelines key deltas
+    into fresh id space).
+    """
     bp = banded_minhash_from_hashes(
-        probe_hashed, id_col, "_bh", num_hashes, bands, use_arrow
+        probe_hashed, id_col, "_bh", num_hashes, bands
     ).alias("p")
     bi = banded_minhash_from_hashes(
-        index_hashed, id_col, "_bh", num_hashes, bands, use_arrow
+        index_hashed, id_col, "_bh", num_hashes, bands
     ).alias("i")
     return (
         bp.join(
@@ -633,6 +462,15 @@ def lsh_probe_candidates_from_hashes(
     )
 
 
+def jaccard(a: Column, b: Column) -> Column:
+    """|A∩B|/|A∪B| of two distinct-element arrays with JVM array
+    intrinsics; 0.0 when both are empty. A ratio of exact set-size
+    integers (raw IEEE division), so bit-identical across engines."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+
+
 def jaccard_pairs_from_hashes(
     a_hashed: DataFrame,
     b_hashed: DataFrame,
@@ -640,8 +478,9 @@ def jaccard_pairs_from_hashes(
     threshold: float = 0.7,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Exact gram Jaccard over candidate pairs, from PRECOMPUTED gram-hash
-    frames: ``id_a`` keys ``a_hashed``, ``id_b`` keys ``b_hashed``.
+    """Exact gram Jaccard over candidate pairs (the confirm stage after
+    LSH), from gram-hash frames: ``id_a`` keys ``a_hashed``, ``id_b`` keys
+    ``b_hashed``.
 
     |A∩B|/|A∪B| over distinct 64-bit gram hashes equals the string-gram
     jaccard of :func:`jaccard_pairs` except under an xxhash64 collision
@@ -663,9 +502,7 @@ def jaccard_pairs_from_hashes(
             on="id_b",
         )
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    jac = jaccard(F.col("_sh_a"), F.col("_sh_b"))
     return out.select("id_a", "id_b", jac.alias("jaccard")).where(
         F.col("jaccard") >= threshold
     )
@@ -679,17 +516,13 @@ def jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.7,
 ) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs (confirm stage after LSH).
+    """Exact n-gram Jaccard over candidate pairs on n-gram STRINGS — the
+    reference :func:`jaccard_pairs_from_hashes` is tested against.
 
-    Joins shingle arrays back onto the (id_a, id_b) candidates — two
-    broadcast-able joins when the candidate set is small, shuffled otherwise
-    — and computes |A∩B|/|A∪B| with JVM array intrinsics.
-
-    The shingle frame is spread across cores (the testdata parquet is one
-    scan partition) and eagerly checkpointed: it feeds BOTH join sides, and
-    without materialization each side would re-derive the full
-    normalize+shingle expression over the corpus — the most expensive map
-    in the pipeline, paid twice.
+    Joins shingle arrays back onto the (id_a, id_b) candidates and
+    computes :func:`jaccard`. The shingle frame is spread and eagerly
+    checkpointed for the same reason as :func:`gram_hashes_frame`: it
+    feeds BOTH join sides.
     """
     sh = (
         _spread(df.select(F.col(id_col), F.col(text_col)))
@@ -704,9 +537,7 @@ def jaccard_pairs(
         .join(sh.withColumnRenamed(id_col, "id_b"), on="id_b")
         .withColumnRenamed("_sh", "_sh_b")
     )
-    inter = F.size(F.array_intersect("_sh_a", "_sh_b"))
-    union = F.size(F.array_union("_sh_a", "_sh_b"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    jac = jaccard(F.col("_sh_a"), F.col("_sh_b"))
     return (
         out.select("id_a", "id_b", jac.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
@@ -806,30 +637,22 @@ def simhash_near_dups(
     id_col: str = "doc_id",
     max_hamming: int = 3,
     shingle_n: int = 2,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming.
 
     Candidate generation blocks on the 16-bit quadrants (pigeonhole: any
     pair within Hamming 3 must agree on at least one of 4 quadrants), so the
     join is equi on (quadrant_idx, quadrant_bits), never a cross product.
-
-    ``use_arrow`` picks the vectorized fingerprint path (default); the pure
-    Column-expression path (:func:`simhash_quadrants`) is kept as the
-    executable spec and for environments without Arrow.
+    Fingerprints come from the Arrow path; :func:`simhash_quadrants` is its
+    Column-expression spec.
     """
     hashed = _spread(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col),
         shingle_hashes(F.col(text_col), shingle_n).alias("_bh"),
     )
-    if use_arrow:
-        fp = hashed.select(
-            F.col(id_col), _simhash_quadrants_arrow()(F.col("_bh")).alias("_fp")
-        )
-    else:
-        fp = hashed.select(
-            F.col(id_col), simhash_quadrants(F.col("_bh")).alias("_fp")
-        )
+    fp = hashed.select(
+        F.col(id_col), _simhash_quadrants_arrow()(F.col("_bh")).alias("_fp")
+    )
     # eager checkpoint of the per-DOC fingerprints before the self-join:
     # compute them ONCE (a lazy persist would let both join-side stages race
     # through the full pipeline concurrently) and truncate lineage so

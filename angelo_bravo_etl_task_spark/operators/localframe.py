@@ -28,9 +28,11 @@ def local_rows_df(
 ) -> DataFrame:
     """``spark.createDataFrame(rows, schema)`` for small literal frames,
     via the Arrow/pandas path (one driver-side conversion, zero Python
-    worker tasks at execution). ``schema`` is a DDL string or StructType;
-    falls back to the classic path if the Arrow conversion cannot
-    represent a value."""
+    worker tasks at execution). ``schema`` is a DDL string or StructType.
+    A value Arrow cannot represent needs no handling here: with
+    ``spark.sql.execution.arrow.pyspark.fallback.enabled`` (on by default)
+    Spark itself retries without Arrow and warns; real schema errors
+    surface."""
     import pandas as pd
     from pyspark.sql.types import StructType, _parse_datatype_string
 
@@ -40,10 +42,5 @@ def local_rows_df(
         else _parse_datatype_string(schema)
     )
     names = [f.name for f in struct.fields]
-    try:
-        pdf = pd.DataFrame(
-            [tuple(r) for r in rows], columns=names, dtype=object
-        )
-        return spark.createDataFrame(pdf, schema=struct)
-    except Exception:  # pragma: no cover — safety net for odd types
-        return spark.createDataFrame([tuple(r) for r in rows], schema)
+    pdf = pd.DataFrame([tuple(r) for r in rows], columns=names, dtype=object)
+    return spark.createDataFrame(pdf, schema=struct)

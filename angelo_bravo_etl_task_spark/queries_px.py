@@ -231,28 +231,27 @@ _NORM = _NORM_SQL
 def d5_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs over a bounded id window
     (the oracle must brute-force the same pairs; the unbounded path is
-    LSH candidates → jaccard_pairs confirm). Ratio = raw IEEE division of
-    exact set-size integers — bit-identical across engines."""
-    from .operators.dedup import shingle_hashes
-    from .operators.partitioning import spread
+    LSH candidates → jaccard_pairs_from_hashes confirm). Ratio = raw IEEE
+    division of exact set-size integers — bit-identical across engines."""
+    from .operators.dedup import gram_hashes_frame, jaccard
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
     # Optimization r11 (guide §2.3): jaccard is a ratio of set SIZES —
     # grams live as 64-bit hashes, the all-pairs intersects compare int64
     # arrays instead of strings (identical modulo in-doc collisions;
     # tri-SF oracle-verified).
-    sh = spread(d.select("doc_id", "text")).select(
-        F.col("doc_id"), shingle_hashes(F.col("text"), 3).alias("_sh")
-    ).localCheckpoint(eager=True)
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sa"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    union = F.size(F.array_union("_sa", "_sb"))
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
+    sh = gram_hashes_frame(d.select("doc_id", "text"), shingle_n=3)
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("_bh").alias("_sa"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("_bh").alias("_sb"))
+    nonempty = F.size(F.array_union("_sa", "_sb")) > 0
     return (
         a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .where((union > 0) & (F.col("jaccard") >= 0.5))
+        .select(
+            "id_a",
+            "id_b",
+            jaccard(F.col("_sa"), F.col("_sb")).alias("jaccard"),
+        )
+        .where(nonempty & (F.col("jaccard") >= 0.5))
     )
 
 
@@ -922,29 +921,10 @@ def d6_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation. Bounded oracle demo by design — the UNBOUNDED scale path
     is d7 (LSH candidates feeding the same connected_components), which is
     also oracle-checked; d8 adds the survivor-selection step."""
-    from .operators.dedup import shingle_hashes
     from .operators.graph import connected_components
-    from .operators.partitioning import spread
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
-    # Optimization r11 (guide §2.3): the released columns are cluster ids
-    # only — jaccard is an internal threshold — so grams live as 64-bit
-    # hashes (no shingle-string materialization; the broadcast and the
-    # 45k pairwise intersect/unions compare int64 arrays, not strings).
-    # Identical modulo in-doc xxhash64 collisions; tri-SF oracle-verified.
-    sh = spread(d.select("doc_id", "text")).select(
-        F.col("doc_id"), shingle_hashes(F.col("text"), 3).alias("_sh")
-    ).localCheckpoint(eager=True)
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sa"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    union = F.size(F.array_union("_sa", "_sb"))
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    pairs = (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .where((union > 0) & (jac >= 0.5))
-        .select("id_a", "id_b")
-    )
+    pairs = d5_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
     comp = connected_components(pairs, src="id_a", dst="id_b")
     return (
         d.select("doc_id")
@@ -982,12 +962,12 @@ _D7_SQL = f"""
 def d7_lsh_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED scale dedup path, end to end over the FULL documents
     table (no id bound anywhere): banded MinHash-LSH candidate generation
-    (operators/dedup.py::minhash_lsh_candidates — signature map, 16-band
-    explode, equi-join on (band, band_hash)) → exact word-3-gram Jaccard
-    confirm at 0.6 (jaccard_pairs — two equi-joins of shingle arrays onto
-    the candidate list) → connected components (operators/graph.py,
-    iterative hash-min label propagation) → every doc labeled with its
-    cluster representative. This is d6's semantics WITHOUT the bounded
+    (operators/dedup.py::minhash_lsh_candidates_from_hashes — signature
+    map, 16-band explode, equi-join on (band, band_hash)) → exact
+    word-3-gram Jaccard confirm at 0.6 (jaccard_pairs_from_hashes — two
+    equi-joins of gram-hash arrays onto the candidate list) → connected
+    components (operators/graph.py, iterative hash-min label
+    propagation) → every doc labeled with its cluster representative. This is d6's semantics WITHOUT the bounded
     all-pairs pair-gen: no BroadcastNestedLoopJoin appears anywhere in the
     composition (plan-asserted in tests/test_plans.py).
 

@@ -69,8 +69,7 @@ def d11_simhash_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the certificate costs one extra equi-join per side of
     the (tiny) flagged-pair set plus a scalar aggregate — the audit any
     production near-dup pass should ship with."""
-    from .operators.dedup import shingle_hashes, simhash_near_dups
-    from .operators.partitioning import spread
+    from .operators.dedup import gram_hashes_frame, jaccard, simhash_near_dups
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     pairs = simhash_near_dups(docs, "text", "doc_id", max_hamming=3)
@@ -78,20 +77,13 @@ def d11_simhash_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thresholded RATIO of set sizes — 2-grams live as 64-bit hashes, no
     # shingle-string materialization (identical modulo in-doc collisions;
     # tri-SF oracle-verified).
-    sh = (
-        spread(docs)
-        .select(F.col("doc_id"), shingle_hashes(F.col("text"), 2).alias("_sh"))
-        .localCheckpoint(eager=True)
-    )
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sa"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb"))
-    union = F.size(F.array_union("_sa", "_sb"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    sh = gram_hashes_frame(docs, shingle_n=2)
+    a = sh.select(F.col("doc_id").alias("id_a"), F.col("_bh").alias("_sa"))
+    b = sh.select(F.col("doc_id").alias("id_b"), F.col("_bh").alias("_sb"))
     mn = (
         pairs.join(a, "id_a")
         .join(b, "id_b")
-        .agg(F.min(jac).alias("_mn"))
+        .agg(F.min(jaccard(F.col("_sa"), F.col("_sb"))).alias("_mn"))
         .localCheckpoint(eager=True)  # guard + result read one computation
     )
     mn_val = mn.first()["_mn"]

@@ -161,11 +161,12 @@ def px7_incremental_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: the probe equi-join on (band, band_hash) touches only
     the buckets the delta hits — cost ∝ |delta|, independent of corpus
-    size (operators/dedup.py:408); the exact confirm joins shingle
-    arrays onto the (small) candidate list; the MERGE is ONE broadcast
-    left join of the absorbed-counts frame (bounded by |delta|) onto the
-    corpus plus a broadcast anti-join for novelty and a union — the
-    corpus is scanned once and never shuffled on a key. Plan-audited: no
+    size (operators/dedup.py::lsh_probe_candidates_from_hashes); the
+    exact confirm joins gram-hash arrays onto the (small) candidate list;
+    the MERGE is ONE broadcast left join of the absorbed-counts frame
+    (bounded by |delta|) onto the corpus plus a broadcast anti-join for
+    novelty and a union — the corpus is scanned once and never shuffled
+    on a key. Plan-audited: no
     BNLJ/cartesian, no corpus self-join. Reference parity: this replaces
     the reference's truncate-and-reload-the-whole-table pattern
     (Angelo_ETL_Task.py:276-374) with the loop that works at any scale;

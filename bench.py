@@ -164,10 +164,11 @@ def main() -> None:
     # three shuffle-bound heavies with shuffle_partitions = $SPARK_GRAFT_CPUS
     # so the cross-core ratio can show parallelism. The main methodology is
     # untouched: same timed action, same scale, same confs for every
-    # pre-existing entry; probe entries are new names (never replacing or
-    # renaming old ones) and are median-of-3 so the cross-run ratio is not
-    # single-sample noise.
+    # registry entry. Probe times are median-of-3 (so the cross-run ratio is
+    # not single-sample noise) and live under their own "scale_probes" key,
+    # outside "queries" and the registry sums.
     _PROBE = ["d6_dup_clusters", "cf1_item_item", "ssj2_shingle_prefix_join"]
+    scale_probes: dict[str, float] = {}
     _cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "32")
     _prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
@@ -177,20 +178,16 @@ def main() -> None:
     for name in _PROBE:
         if name not in QUERIES:
             continue
-        probe_key = f"scaleprobe_{name}"
         try:
             samples = [run_once(name) for _ in range(3)]
         except Exception as exc:
-            timings[probe_key] = -1.0
-            print(f"# bench error {probe_key}: {exc}",
+            scale_probes[name] = -1.0
+            print(f"# bench error scale probe {name}: {exc}",
                   file=sys.stderr, flush=True)
             continue
-        t, median_backed = settle_samples(samples)
-        timings[probe_key] = t
-        if median_backed:
-            median_of[probe_key] = len(samples)
-        print(f"# {probe_key}: {t}s of {sorted(samples)}",
-              file=sys.stderr, flush=True)
+        scale_probes[name] = settle_samples(samples)[0]
+        print(f"# scale probe {name}: {scale_probes[name]}s of "
+              f"{sorted(samples)}", file=sys.stderr, flush=True)
     spark.conf.set("spark.sql.shuffle.partitions", _prev_parts)
 
     # Environment markers (verdict r8 item 2, adjudicated in
@@ -232,6 +229,7 @@ def main() -> None:
         # where a tail-window capture preserves them.
         "queries": timings,
         "median_of": median_of,
+        "scale_probes": scale_probes,
         "env": env_markers,
         "sf": sf,
         "n_queries": len(timings),

@@ -95,3 +95,23 @@ def test_bench_delta_write_median_set(tmp_path):
         assert names.count("mb2_association_rules") == 1  # no dup
     finally:
         open(med_path, "w").write(before)
+
+
+def test_plan_capture_masks_session_ids():
+    """Two captures of one plan differ only in session counters: expression
+    ids and RDD ids are masked, everything else is kept verbatim."""
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from plan_capture import mask_ids
+
+    first = (
+        "Output [2]: [doc_id#12L, _bh#13]\n"
+        "Arguments: [doc_id#12L], MapPartitionsRDD[45] at localCheckpoint\n"
+    )
+    second = (
+        "Output [2]: [doc_id#907L, _bh#908]\n"
+        "Arguments: [doc_id#907L], MapPartitionsRDD[3] at localCheckpoint\n"
+    )
+    assert mask_ids(first) == mask_ids(second) == (
+        "Output [2]: [doc_id#NL, _bh#N]\n"
+        "Arguments: [doc_id#NL], MapPartitionsRDD[N] at localCheckpoint\n"
+    )

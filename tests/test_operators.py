@@ -33,8 +33,8 @@ def docs(spark):
 def test_minhash_lsh_finds_planted_dups(docs):
     pairs = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_candidates(
-            docs, num_hashes=32, bands=16, shingle_n=3
+        for r in D.minhash_lsh_candidates_from_hashes(
+            D.gram_hashes_frame(docs, shingle_n=3), num_hashes=32, bands=16
         ).collect()
     }
     assert (1, 2) in pairs  # exact dup always collides
@@ -43,8 +43,9 @@ def test_minhash_lsh_finds_planted_dups(docs):
 
 
 def test_jaccard_confirm(docs):
-    cands = D.minhash_lsh_candidates(docs, num_hashes=32, bands=16)
-    confirmed = D.jaccard_pairs(docs, cands, threshold=0.5).collect()
+    h = D.gram_hashes_frame(docs)
+    cands = D.minhash_lsh_candidates_from_hashes(h, num_hashes=32, bands=16)
+    confirmed = D.jaccard_pairs_from_hashes(h, h, cands, threshold=0.5).collect()
     by_pair = {(r["id_a"], r["id_b"]): r["jaccard"] for r in confirmed}
     assert by_pair[(1, 2)] == 1.0
     assert all(j >= 0.5 for j in by_pair.values())

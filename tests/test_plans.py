@@ -126,7 +126,7 @@ def test_bk1_bucketed_join_has_no_exchange_below_join(spark, sf_dir):
 def test_d7_composition_has_no_nested_loop_join(spark, sf_dir):
     """The composed LSH→confirm→CC dedup path (d7) must be equi-joins all
     the way down: candidate generation is a (band, band_hash) self-join,
-    the Jaccard confirm joins shingles onto candidates by id, and every CC
+    the Jaccard confirm joins gram hashes onto candidates by id, and every CC
     round joins labels by vertex id. No stage may fall back to a
     BroadcastNestedLoopJoin or CartesianProduct — that is the d6 bounded
     demo's shape, exactly what d7 exists to avoid. connected_components
@@ -134,14 +134,18 @@ def test_d7_composition_has_no_nested_loop_join(spark, sf_dir):
     checked where it is still inspectable: the candidate and confirm
     frames, plus the final labeled output."""
     from angelo_bravo_etl_task_spark.operators.dedup import (
-        jaccard_pairs,
-        minhash_lsh_candidates,
+        gram_hashes_frame,
+        jaccard_pairs_from_hashes,
+        minhash_lsh_candidates_from_hashes,
     )
     from angelo_bravo_etl_task_spark.sources.readers import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    cand = minhash_lsh_candidates(docs)
-    confirmed = jaccard_pairs(docs, cand, threshold=0.6).select("id_a", "id_b")
+    h = gram_hashes_frame(docs)
+    cand = minhash_lsh_candidates_from_hashes(h)
+    confirmed = jaccard_pairs_from_hashes(h, h, cand, threshold=0.6).select(
+        "id_a", "id_b"
+    )
     for frame in (cand, confirmed):
         assert_plan(
             frame,

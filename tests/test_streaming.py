@@ -288,14 +288,22 @@ def test_transform_with_state_user_totals(spark, sf_dir):
 
 def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
     """Exactly-once across a query RESTART: a windowed streaming aggregate
-    runs one micro-batch (maxFilesPerTrigger=1 over a 3-file staging dir),
-    stops, and a NEW query object resumes from the same checkpoint with
-    availableNow. The parquet sink must hold every watermark-finalized
-    window exactly once — no loss (offsets not re-read) and no duplication
-    (windows already emitted before the stop are not re-emitted), because
-    the checkpoint persists both the source offsets and the window state.
-    This is the recovery contract a production job relies on; the memory
-    sink can't test it (it does not survive the query object)."""
+    runs at least one micro-batch (maxFilesPerTrigger=1 over a 2-file
+    staging dir), stops, a third file lands, and a NEW query object resumes
+    from the same checkpoint with availableNow. The parquet sink must hold
+    every watermark-finalized window exactly once — no loss (offsets not
+    re-read) and no duplication (windows already emitted before the stop
+    are not re-emitted), because the checkpoint persists both the source
+    offsets and the window state. This is the recovery contract a
+    production job relies on; the memory sink can't test it (it does not
+    survive the query object).
+
+    The third file lands AFTER the stop because the checkpoint does not
+    hold the max event time of the last batch before a stop: if run 1
+    consumed every file and stopped before its trailing no-data batch, a
+    restart with no new input keeps the older watermark from the offset
+    log and never emits the last windows. New input after the restart is
+    what advances the watermark again, as in a production job."""
     from pyspark.sql import functions as F
 
     from angelo_bravo_etl_task_spark.sources.readers import load_table
@@ -317,9 +325,13 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
         ev.where((F.col("ts") >= cuts[0]) & (F.col("ts") < cuts[1])),
         ev.where(F.col("ts") >= cuts[1]),
     ]
-    for s in slices:
+
+    def stage(s):
         s.coalesce(1).write.mode("append").parquet(staged)
         time.sleep(1.1)  # distinct mtimes -> deterministic replay order
+
+    for s in slices[:2]:
+        stage(s)
     ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "sink")
 
     def start_query():
@@ -352,6 +364,7 @@ def test_checkpoint_restart_exactly_once(spark, sf_dir, tmp_path):
             time.sleep(0.5)
         q1.stop()
         q1.awaitTermination(60)
+        stage(slices[2])
         # run 2: resume from the checkpoint, drain everything remaining
         q2 = start_query().trigger(availableNow=True).start()
         q2.awaitTermination(120)

@@ -1,33 +1,44 @@
-"""Capture `.explain("formatted")` for named queries into plans/r11/.
+"""Capture `.explain("formatted")` for named queries into a directory.
 
 Usage:
-    python tools/plan_capture.py --suffix before [--sf /root/testdata/sf0.1] name...
-    python tools/plan_capture.py --suffix after name...
+    python tools/plan_capture.py --outdir DIR --suffix before [--sf SF_DIR] name...
+    python tools/plan_capture.py --outdir DIR --suffix after name...
+    diff DIR/<name>_before.txt DIR/<name>_after.txt
 
-Writes plans/r11/<name>_<suffix>.txt. Plan capture only analyzes/optimizes,
-it does not execute, so it is cheap and safe to run alongside other work.
-Streaming queries (whose builder executes a run) are skipped unless --exec
-is given.
+Writes DIR/<name>_<suffix>.txt. Expression ids (``#123``) and RDD ids
+(``RDD[45]``) are masked in the written text: both are session counters,
+so without masking a plan-neutral refactor still diffs on every line.
+Plan capture only analyzes/optimizes the final frame; query functions
+that run eager jobs (checkpoints, collects, stream runs) still run them.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from angelo_bravo_etl_task_spark.queries import QUERIES  # noqa: E402
-from angelo_bravo_etl_task_spark.session import get_spark  # noqa: E402
+_EXPR_ID = re.compile(r"#\d+")
+_RDD_ID = re.compile(r"RDD\[\d+\]")
+
+
+def mask_ids(text: str) -> str:
+    """Replace session-counter ids so two captures of one plan compare equal."""
+    return _RDD_ID.sub("RDD[N]", _EXPR_ID.sub("#N", text))
 
 
 def main() -> None:
+    from angelo_bravo_etl_task_spark.queries import QUERIES
+    from angelo_bravo_etl_task_spark.session import get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--suffix", required=True)
-    ap.add_argument("--outdir", default=os.path.join(REPO, "plans", "r11"))
+    ap.add_argument("--outdir", required=True)
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
@@ -52,7 +63,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             txt = f"PLAN CAPTURE FAILED: {exc}\n"
         with open(out, "w") as f:
-            f.write(txt)
+            f.write(mask_ids(txt))
         print(f"wrote {out}", file=sys.stderr)
     spark.stop()
 

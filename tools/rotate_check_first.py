@@ -154,7 +154,8 @@ def rewrite(head: list[str], recheck: list[str]) -> None:
     lines.append("# round before going red.")
     lines.append(f"_CHECK_FIRST_ACK_ROUND: int = {latest_round()}")
     lines.append("# Already-swept names deliberately kept in the head for")
-    lines.append("# re-certification (--prioritize); not hand-drift.")
+    lines.append("# re-certification (--prioritize, or padding once fewer")
+    lines.append("# than 50 never-swept names remain); not hand-drift.")
     lines.append(f"_CHECK_FIRST_RECHECK: list[str] = {recheck!r}")
     lines.append(SENTINEL)
     open(path, "w").write(src[:start] + "\n".join(lines) + src[end:])
@@ -168,7 +169,9 @@ def main() -> None:
     pri = [n for n in args.prioritize.split(",") if n]
     head = next_head(pri)
     if args.write:
-        recheck = sorted(set(pri) & load_swept())
+        # every swept name in the head is a deliberate re-check: either
+        # --prioritize asked for it or the pad branch re-confirms it
+        recheck = sorted(set(head) & load_swept())
         rewrite(head, recheck)
         print(f"# wrote {len(head)} names to queries.py::_CHECK_FIRST",
               file=sys.stderr)
