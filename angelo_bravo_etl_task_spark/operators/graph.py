@@ -17,11 +17,14 @@ large-star/small-star scheme, which pays off on long-chain graphs that
 simply don't arise from similarity thresholds.
 
 Scale shape per round: one shuffle to join labels onto edges (keyed by
-vertex id, AQE-skew-splittable), one map-side-combinable min-agg. Lineage is
-truncated every round with an EAGER localCheckpoint — without it the plan
-doubles per iteration and the job dies on planning time long before data
-size matters. The convergence probe is a count on the checkpointed frame
-(already materialized, so it is a metadata action, not a recompute).
+vertex id, AQE-skew-splittable), one map-side-combinable min-agg that also
+carries each node's previous label. Lineage is truncated every round with a
+LAZY localCheckpoint — without it the plan doubles per iteration and the job
+dies on planning time long before data size matters. One count per round,
+of the nodes whose label changed, both materializes the checkpoint and
+decides convergence: no separate probe job, no eager pre-rounds (the
+symmetric edge list and the initial labels are computed inside round 1's
+job, and later rounds read the edge list from its checkpoint).
 """
 
 from __future__ import annotations
@@ -55,7 +58,7 @@ def connected_components(
         fwd.unionByName(fwd.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
 
     # label(v) = min(v, min over neighbors u of label(u)), iterated
@@ -66,27 +69,23 @@ def connected_components(
             F.col("v").alias("node"),
             F.least(F.col("v"), F.col("comp")).alias("comp"),
         )
-        .localCheckpoint(eager=True)
     )
+    # edge rows carry no previous label; typed so string ids work too
+    no_old = F.lit(None).cast(labels.schema["comp"].dataType).alias("old")
 
     for _ in range(max_iter):
-        # propagate: neighbor labels flow along edges, then min with own
+        # propagate: neighbor labels flow along edges, then min with own;
+        # max(old) is the node's previous label (its only non-null old)
         prop = (
             sym.join(labels, sym["u"] == labels["node"], "inner")
-            .select(F.col("v").alias("node"), F.col("comp"))
-            .unionByName(labels)
+            .select(F.col("v").alias("node"), F.col("comp"), no_old)
+            .unionByName(labels.select("node", "comp", F.col("comp").alias("old")))
             .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("comp").alias("comp"), F.max("old").alias("old"))
+            .localCheckpoint(eager=False)
         )
-        changed = (
-            prop.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .where(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = prop
+        changed = prop.where(F.col("comp") != F.col("old")).count()
+        labels = prop.select("node", "comp")
         if changed == 0:
             break
 

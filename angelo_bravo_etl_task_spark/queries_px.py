@@ -230,28 +230,18 @@ _NORM = _NORM_SQL
 )
 def d5_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs over a bounded id window
-    (the oracle must brute-force the same pairs; the unbounded path is
-    LSH candidates → jaccard_pairs_from_hashes confirm). Ratio = raw IEEE
-    division of exact set-size integers — bit-identical across engines."""
-    from .operators.dedup import gram_hashes_frame, jaccard
+    (the oracle brute-forces all pairs of the same window; the unbounded
+    path is LSH candidates → jaccard_pairs_from_hashes confirm). Pairs come
+    from an inverted gram index (operators/dedup.py::gram_index_pairs —
+    gram equi-join, shared-gram count per pair), not all-pairs arrays.
+    Grams live as 64-bit hashes (identical modulo in-doc collisions;
+    tri-SF oracle-verified). Ratio = raw IEEE division of exact set-size
+    integers — bit-identical across engines."""
+    from .operators.dedup import gram_hashes_frame, gram_index_pairs
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
-    # Optimization r11 (guide §2.3): jaccard is a ratio of set SIZES —
-    # grams live as 64-bit hashes, the all-pairs intersects compare int64
-    # arrays instead of strings (identical modulo in-doc collisions;
-    # tri-SF oracle-verified).
-    sh = gram_hashes_frame(d.select("doc_id", "text"), shingle_n=3)
-    a = sh.select(F.col("doc_id").alias("id_a"), F.col("_bh").alias("_sa"))
-    b = sh.select(F.col("doc_id").alias("id_b"), F.col("_bh").alias("_sb"))
-    nonempty = F.size(F.array_union("_sa", "_sb")) > 0
-    return (
-        a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            jaccard(F.col("_sa"), F.col("_sb")).alias("jaccard"),
-        )
-        .where(nonempty & (F.col("jaccard") >= 0.5))
+    return gram_index_pairs(
+        gram_hashes_frame(d.select("doc_id", "text"), shingle_n=3), 0.5
     )
 
 
@@ -913,14 +903,16 @@ def st1_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d6_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup PAIRS -> duplicate CLUSTERS (the step every dedup pipeline
     needs after d3/d4/d5: "keep one doc per group"): connected components
-    (operators/graph.py, iterative hash-min label propagation with eager
-    lineage checkpoints) over the d5 word-3-gram Jaccard pair graph, with
-    singleton docs as their own cluster. The oracle replays the same edges
-    through a recursive CTE (min label reachable = component min), so the
-    driver verifies the ITERATIVE algorithm's fixpoint, not just the pair
-    generation. Bounded oracle demo by design — the UNBOUNDED scale path
-    is d7 (LSH candidates feeding the same connected_components), which is
-    also oracle-checked; d8 adds the survivor-selection step."""
+    (operators/graph.py, iterative hash-min label propagation, one lazily
+    checkpointed round per Spark action) over the d5 word-3-gram Jaccard
+    pair graph — pairs from an inverted gram index, not all-pairs arrays —
+    with singleton docs as their own cluster. The oracle replays the same
+    edges through a recursive CTE (min label reachable = component min), so
+    the oracle check verifies the ITERATIVE algorithm's fixpoint, not the
+    pair generation. Bounded id window because the oracle brute-forces all
+    pairs — the UNBOUNDED scale path is d7 (LSH candidates feeding the same
+    connected_components), which is also oracle-checked; d8 adds the
+    survivor-selection step."""
     from .operators.graph import connected_components
 
     d = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
@@ -968,7 +960,7 @@ def d7_lsh_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-joins of gram-hash arrays onto the candidate list) → connected
     components (operators/graph.py, iterative hash-min label
     propagation) → every doc labeled with its cluster representative. This is d6's semantics WITHOUT the bounded
-    all-pairs pair-gen: no BroadcastNestedLoopJoin appears anywhere in the
+    id window: no BroadcastNestedLoopJoin appears anywhere in the
     composition (plan-asserted in tests/test_plans.py).
 
     Oracle parity despite LSH being a candidate FILTER: the oracle computes

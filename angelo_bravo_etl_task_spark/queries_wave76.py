@@ -75,6 +75,16 @@ def _run_stream_to_memory(
             .trigger(processingTime="0 seconds")
             .start()
         )
+        # rows per batchId, accumulated across polls: recentProgress is a
+        # ring buffer of the last 100 progress events, so a sum over it
+        # alone stops growing once older batches fall out of it
+        rows_by_batch: dict[int, int] = {}
+
+        def _fold_progress() -> None:
+            for p in q.recentProgress or []:
+                if p:
+                    rows_by_batch[p["batchId"]] = int(p["numInputRows"])
+
         try:
             deadline = time.time() + timeout
             while time.time() < deadline:
@@ -87,24 +97,18 @@ def _run_stream_to_memory(
                 # progress event is published, so the break condition is
                 # unchanged. The final count() assertion below still
                 # verifies the sink itself.
-                done = sum(
-                    int(p["numInputRows"])
-                    for p in (q.recentProgress or [])
-                    if p
-                )
-                if done >= _SRC9_N_ROWS:
+                _fold_progress()
+                if sum(rows_by_batch.values()) >= _SRC9_N_ROWS:
                     break
                 time.sleep(0.05)
         finally:
             q.stop()
-        # Derive the batch count AFTER stop() from recentProgress (max
-        # batchId): lastProgress can be None or lag the final committed
-        # batch right after the row-count poll breaks, which made the
-        # multi-batch assertion flaky even on genuinely ~7-batch runs.
-        batches = max(
-            (p["batchId"] for p in (q.recentProgress or []) if p),
-            default=0,
-        )
+        # Derive the batch count AFTER stop() (max batchId): lastProgress
+        # can be None or lag the final committed batch right after the
+        # row-count poll breaks, which made the multi-batch assertion
+        # flaky even on genuinely ~7-batch runs.
+        _fold_progress()
+        batches = max(rows_by_batch, default=0)
     assert spark.table(sink).count() == _SRC9_N_ROWS, "stream did not drain"
     assert batches >= _SRC9_N_ROWS // _SRC9_STEP - 1, (
         "expected a multi-batch run",

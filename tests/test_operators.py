@@ -303,8 +303,51 @@ def test_connected_components_long_chain(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(11)], "src long, dst long"
     )
-    rows = connected_components(edges).collect()
+    out = connected_components(edges)
+    rows = out.collect()
     assert len(rows) == 12 and all(r["component"] == 0 for r in rows)
+    # lineage stays truncated: the result reads the last round's
+    # checkpoint, no join of any earlier round is left in its plan
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan and "LogicalRDD" in plan, plan
+
+
+def test_connected_components_string_ids(spark):
+    """The previous-label column is cast to the label type: string ids."""
+    from angelo_bravo_etl_task_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [("b", "a"), ("b", "c"), ("x", "y")], "src string, dst string"
+    )
+    got = {tuple(r) for r in connected_components(edges).collect()}
+    assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
+
+
+def test_connected_components_empty(spark):
+    from angelo_bravo_etl_task_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    assert connected_components(edges).collect() == []
+
+
+def test_gram_index_pairs_equal_all_pairs_jaccard(spark, sf_dir):
+    """The inverted-index pair join returns exactly the all-pairs
+    jaccard() >= 0.5 over id_a < id_b (d5's window), doubles bit-equal."""
+    from angelo_bravo_etl_task_spark.sources.readers import load_table
+
+    docs = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
+    h = D.gram_hashes_frame(docs.select("doc_id", "text"))
+    a = h.select(F.col("doc_id").alias("id_a"), F.col("_bh").alias("_sa"))
+    b = h.select(F.col("doc_id").alias("id_b"), F.col("_bh").alias("_sb"))
+    brute = {
+        tuple(r)
+        for r in a.join(b, F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", D.jaccard(F.col("_sa"), F.col("_sb")).alias("j"))
+        .where(F.col("j") >= 0.5)
+        .collect()
+    }
+    got = {tuple(r) for r in D.gram_index_pairs(h, 0.5).collect()}
+    assert got == brute and len(got) > 0
 
 
 def test_salted_join_equals_plain_join(spark):

@@ -128,9 +128,9 @@ def test_d7_composition_has_no_nested_loop_join(spark, sf_dir):
     the way down: candidate generation is a (band, band_hash) self-join,
     the Jaccard confirm joins gram hashes onto candidates by id, and every CC
     round joins labels by vertex id. No stage may fall back to a
-    BroadcastNestedLoopJoin or CartesianProduct — that is the d6 bounded
-    demo's shape, exactly what d7 exists to avoid. connected_components
-    executes eagerly (per-round checkpoints), so each stage's plan is
+    BroadcastNestedLoopJoin or CartesianProduct — a nested loop is
+    quadratic in the corpus. connected_components runs one Spark action
+    per round (checkpointed labels), so each stage's plan is
     checked where it is still inspectable: the candidate and confirm
     frames, plus the final labeled output."""
     from angelo_bravo_etl_task_spark.operators.dedup import (
@@ -418,12 +418,11 @@ def test_registry_wide_no_unexpected_nested_loops(spark, sf_dir):
     totals, tc1 edge count, q11/q22 threshold scalars, ts1 bounds, sk1
     salt spine, sk2 totals, x4/x6 centroid sets, fe1 bounds, tx10/ab1
     corpus scalars) or a documented bounded demo (x1/x3/x7 probe sets,
-    d5/d6 bounded oracle variants, fz1/er1 probe lists, j5 itself,
-    sm1's fraction spine). Any NEW nested loop is a scale regression
-    and fails here with its plan."""
+    fz1/er1 probe lists, j5 itself, sm1's fraction spine). Any NEW nested
+    loop is a scale regression and fails here with its plan."""
     allowed = {
         "j5_cross_join", "x1_cosine_topk", "x3_embedding_near_dup",
-        "x7_quantized_cosine", "d5_ngram_jaccard", "d6_dup_clusters",
+        "x7_quantized_cosine",
         "fz1_levenshtein", "er1_blocked_fuzzy_match", "fe1_feature_binning",
         "tx10_tfidf_keywords", "ab1_experiment_analysis",
         "sm1_stratified_sample", "fn1_funnel", "qt1_exact_quantiles",
@@ -452,7 +451,7 @@ def test_registry_wide_no_unexpected_nested_loops(spark, sf_dir):
         "bloom1_bloom_prefilter",
         # fc1 broadcasts the 1-row (last_day, n_train) scalar frame
         "fc1_seasonal_baseline",
-        # d9: bounded-window brute-force pairs, same oracle-demo shape as d5
+        # d9: bounded doc_id < 300 window, brute-force pairs (oracle demo)
         "d9_containment_dedup",
         # km1: 8-row seed-centroid broadcast, same shape as x4/x6
         "km1_kmeans_iteration",
@@ -632,7 +631,7 @@ def test_registry_wide_no_unexpected_nested_loops(spark, sf_dir):
         # jel1 assembles its single row from four 1-row count frames
         "jel1_join_elimination",
         # d10's ground-truth pair join runs on the bounded doc_id < 300
-        # audit slice — the documented d5/d9 oracle-demo shape
+        # audit slice — the documented d9 oracle-demo shape
         "d10_minhash_recall",
         # px6 broadcasts the centroid-dimension frame for IVF assignment
         # (x4/x8's shape)
@@ -753,7 +752,7 @@ def test_registry_wide_no_unbounded_global_windows(spark, sf_dir):
         # over the corpus frame; docstring documents ord1's two-level
         # sharded prefix sum as the 100 TB form
         "wt1_systematic_sample",
-        # recall-audit demo over the bounded %3 slice (the d5/d9
+        # recall-audit demo over the bounded %3 slice (the d9
         # oracle-demo shape, already BNLJ-allowlisted)
         "d10_minhash_recall",
     }
